@@ -128,7 +128,7 @@ object Bench {
       // headline: broadcast cell join — the correct 100 TB plan for a small
       // method table (no shuffle of the big side at all)
       def joinOnce(): Unit =
-        engine.SpatialJoin.pipJoin(g, polys, z = 4, broadcastPolys = true).count()
+        engine.SpatialJoin.pipJoin(g, polys, z = 4).count()
       // fallback path: shuffle join with salted skew handling (method side
       // too big to broadcast in the general case)
       def joinSaltedOnce(): Unit =

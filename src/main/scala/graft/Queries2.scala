@@ -1065,8 +1065,8 @@ object Queries2 {
     }),
 
     // -- declarative spatial join: the NAIVE predicate-join formulation,
-    // rewritten by CellJoinRule into the cell-cover equi-join (the rewrite
-    // is asserted plan-level in CellJoinRuleSpec; here the rows are gated
+    // rewritten by CellJoinRule into the broadcast cell-index PIP join (the
+    // rewrite is asserted plan-level in CellJoinRuleSpec; here the rows are gated
     // against the closed-form band-membership oracle)
     ("g30_rule_join", (s, dir) => {
       prep(s)

@@ -1293,15 +1293,12 @@ object Queries3 {
       SELECT CAST(b AS BIGINT) AS d0, CAST(sum(val) AS BIGINT) AS s
       FROM v GROUP BY 1 ORDER BY 1""")),
 
-    // -- SparkStrategy physical path (PipJoinExec.scala): the same naive
-    // st_contains_point join as g30, planned by BroadcastPipJoinExec
-    // (spark.graft.celljoin.strategy=exec on an isolated newSession —
-    // PipJoinStrategySpec asserts the plan shape; this gate asserts the
-    // results against the closed-form PIP oracle).
-    ("g38_strategy_join", (s0, dir) => {
-      val s = s0.newSession()
+    // -- SparkStrategy physical path (PipJoinExec.scala): a naive
+    // st_contains_point join over a second polygon set, planned by
+    // BroadcastPipJoinExec (PipJoinStrategySpec asserts the plan shape;
+    // this gate asserts the results against the closed-form PIP oracle).
+    ("g38_strategy_join", (s, dir) => {
       functions.GraftFunctions.register(s)
-      s.conf.set("spark.graft.celljoin.strategy", "exec")
       import s.implicits._
       import graft.functions.gf
       val pts = Queries.eventPoints(s, dir).where(col("event_id") < 3000)

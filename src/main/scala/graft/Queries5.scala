@@ -789,7 +789,7 @@ object Queries5 {
 
     // -- Stream-static PIP enrichment (s04): the flagship spatial join with
     // a streaming point side — stateless append-mode micro-batches over the
-    // same st_cell + broadcast + WKB-refine plan, across a checkpoint
+    // same BroadcastPipJoinExec plan as the batch join, across a checkpoint
     // restart (re-enrichment on restart would duplicate rows and fail the
     // compare). Twin: the batch g03 oracle.
     ("s04_stream_pip", (s, dir) => {

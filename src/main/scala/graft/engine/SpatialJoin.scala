@@ -2,8 +2,11 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.graft.ColumnBridge
 import graft.functions.gf
 import graft.geom.{BoolOps, Geom, Wkb}
+import graft.plans.PipJoin
 
 /** Cell-indexed spatial joins — the north-rule operator (SURVEY.md §2.E).
   *
@@ -11,46 +14,42 @@ import graft.geom.{BoolOps, Geom, Wkb}
   * feature, iterate candidates, refine with prepared geometry",
   * /root/reference/ogr/ogrsf_frmts/generic/ogrlayer.cpp:5385-5538):
   *
-  *   polygons --st_cover(z)--> exploded (cell, poly)   [small side: broadcast]
+  *   polygons --st_cover(z)--> (cell, poly)   [small side: broadcast]
   *   points   --st_cell(z)---> (cell, point)
-  *   equi-join on cell → exact PIP refine (st_contains_point)
+  *   match on cell → exact PIP refine (st_contains_point)
   *
   * A point lands in exactly one cell, so point-vs-polygon candidates are
   * already distinct — no dedup needed. Polygon-vs-polygon joins dedup on the
   * id pair before the (expensive) exact predicate.
   *
   * Scale notes (100 TB):
-  *  - polygon side exploded by its cover; choose z so covers stay small
-  *    (cells ≈ envelope_area / cell_area; z+1 quadruples cells)
-  *  - broadcast when the exploded cover fits (dims like admin boundaries);
-  *    shuffle hash/sort-merge otherwise — Spark/AQE picks by size, we only
-  *    hint explicitly when told
-  *  - skewed cells (everyone in one city): `saltedPipJoin` splits each hot
-  *    cell into S sub-keys; AQE skew-join also re-splits at runtime
+  *  - `pipJoin` always broadcasts the polygon side as a cell index
+  *    (graft.plans.BroadcastPipJoinExec) and never shuffles the points; it
+  *    refuses a polygon side above `spark.sql.maxBroadcastTableSize`
+  *  - polygon sides that large, or skewed cells (everyone in one city),
+  *    take `pipJoinSalted`: a partitioned equi-join on (cell, salt)
+  *  - choose z so covers stay small (cells ≈ envelope_area / cell_area;
+  *    z+1 quadruples cells)
+  *  - `intersectsJoin` explodes both covers; Spark/AQE picks broadcast or
+  *    shuffle by size, we only hint explicitly when told
   */
 object SpatialJoin {
 
   /** Point-in-polygon join. `pts` needs (lon, lat), `polys` needs `wkb`.
-    * Returns pts columns + polys columns for every (point, polygon) pair
-    * where the polygon contains the point (ray-crossing rule).
+    * Returns pts columns + polys columns, with the polygon's `wkb` renamed
+    * `poly_wkb`, for every (point, polygon) pair where the polygon contains
+    * the point (ray-crossing rule). Plans as one
+    * graft.plans.BroadcastPipJoinExec with cell index zoom `z`.
     */
-  def pipJoin(pts: DataFrame, polys: DataFrame, z: Int,
-              broadcastPolys: Boolean = true,
-              predicate: String = "contains"): DataFrame = {
+  def pipJoin(pts: DataFrame, polys: DataFrame, z: Int): DataFrame = {
     // the polygon geometry is namespaced to poly_wkb so points may carry
     // their own wkb column (e.g. geo-docs rows) through the join untouched
-    val cover = polys.withColumnRenamed("wkb", "poly_wkb")
-      .withColumn("cell", explode(gf.st_cover(col("poly_wkb"), lit(z))))
-    val side = if (broadcastPolys) broadcast(cover) else cover
-    val refine: Column = predicate match {
-      case "contains"   => gf.st_contains_point(col("poly_wkb"), col("lon"), col("lat"))
-      case "intersects" => gf.st_intersects_point(col("poly_wkb"), col("lon"), col("lat"))
-      case other => throw new IllegalArgumentException(s"predicate $other")
-    }
-    pts.withColumn("cell", gf.st_cell(col("lon"), col("lat"), lit(z)))
-      .join(side, "cell")
-      .where(refine)
-      .drop("cell")
+    val p = polys.withColumnRenamed("wkb", "poly_wkb")
+    // the analyzed naive join brings self-join dedup and the predicate's
+    // implicit casts; it is then lowered onto the PipJoin node
+    val naive = pts.join(p, gf.st_contains_point(p("poly_wkb"), pts("lon"), pts("lat")))
+    val lowered = PipJoin.lower(naive.queryExecution.analyzed.asInstanceOf[Join], z)
+    ColumnBridge.ofRows(pts.sparkSession, lowered.get)
   }
 
   /** Salted PIP join for skewed cells: every point key becomes

@@ -19,14 +19,19 @@ import org.apache.spark.unsafe.types.UTF8String
 private object K { final val N = "graft.functions.GeoKernel" }
 
 /** Column ↔ Expression bridge for engine code that constructs
-  * data-parameterized expressions (VecNearestCid/VecProbeCids) directly —
-  * the classic ExpressionUtils is private[sql] and this package sits
-  * inside org.apache.spark.sql, so the access is legal here. */
+  * data-parameterized expressions (VecNearestCid/VecProbeCids) directly,
+  * and a DataFrame factory for hand-built logical plans (PipJoin) — the
+  * classic ExpressionUtils and Dataset.ofRows are private[sql] and this
+  * package sits inside org.apache.spark.sql, so the access is legal here. */
 object ColumnBridge {
   def column(e: Expression): org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
   def expression(c: org.apache.spark.sql.Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }
 
 // ------------------------------------------------------------------ codecs

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.sql.graft.{StCell, StContainsPoint, StCover, StCoverCount, StIntersects, StIntersectsPoint}
+import org.apache.spark.sql.graft.{StCover, StCoverCount, StIntersects}
 
 /** Optimizer rule: rewrite naive spatial-predicate joins
   *
@@ -14,39 +14,38 @@ import org.apache.spark.sql.graft.{StCell, StContainsPoint, StCover, StCoverCoun
   *   a      JOIN b     ON st_intersects(a.wkb, b.wkb)
   *
   * — which Spark can only plan as nested-loop / cartesian joins, O(n·m)
-  * predicate evaluations — into the cell-indexed equi-joins the engine's
-  * SpatialJoin API builds by hand:
+  * predicate evaluations — into cell-indexed joins:
   *
-  *   point case:  points + st_cell(lon,lat,z)  ⋈_cell  polys × explode(st_cover(wkb,z))
-  *                … refined by the ORIGINAL predicate (a point is in exactly
-  *                one cell, so no dedup is introduced)
+  *   point case:  the join becomes a [[PipJoin]] (st_intersects_point sets
+  *                its boundary flag), which [[PipJoinStrategy]] plans as
+  *                [[BroadcastPipJoinExec]]: polygons indexed by cell cover
+  *                and broadcast, one cell probe per point, exact refine.
+  *                Oversized covers go to the exec's always-probed side list.
   *   geom case:   both sides explode their covers and equi-join on the cell;
   *                a pair sharing k cells would appear k times, so the join
   *                keeps only the row whose matched cell is the MINIMUM cell
   *                shared by both covers (array_min ∘ array_intersect — the
   *                classic report-at-smallest-common-cell dedup, fully
   *                distributed, no aggregation barrier), then refines with
-  *                the original predicate.
+  *                the original predicate. The equi-join key lets Catalyst
+  *                pick broadcast-hash or sort-merge (and AQE handle skew)
+  *                instead of a quadratic loop.
   *
-  * The equi-join key lets Catalyst pick broadcast-hash or sort-merge (and AQE
-  * handle skew) instead of a quadratic loop — at 100 TB this is the
-  * difference between a plan that finishes and one that cannot.
-  *
-  * Oversize guard (geometries whose cover at the chosen zoom would exceed
-  * CellId.cover's 4096-cell cap — continental polygons at a fine zoom):
-  * each geometry side is split by the cheap envelope-only st_cover_count
-  * predicate; fitting rows take the cell join, oversized rows fall back to
-  * the original nested-loop join, and the branches union. A user-raised
-  * spark.graft.celljoin.zoom therefore degrades those rows to the naive
-  * (slow but correct) path instead of throwing mid-query.
+  * Geom-case oversize guard (geometries whose cover at the chosen zoom
+  * would exceed CellId.cover's 4096-cell cap — continental polygons at a
+  * fine zoom): each side is split by the cheap envelope-only
+  * st_cover_count predicate; fitting rows take the cell join, oversized
+  * rows fall back to the original nested-loop join, and the branches
+  * union. A user-raised spark.graft.celljoin.zoom therefore degrades those
+  * rows to the naive (slow but correct) path instead of throwing mid-query.
   *
   * Reference analog: OGR's layer-algebra loop installs a spatial filter per
   * probe feature (ogrlayer.cpp:5385-5538) — its index-accelerated candidate
   * scan is exactly what this rewrite recovers declaratively.
   *
   * The rule fires only when the join condition IS the bare spatial
-  * predicate (the rewritten plans carry the predicate under an And, so they
-  * never re-fire). Zoom is configurable with `spark.graft.celljoin.zoom`
+  * predicate (the geom rewrite carries the predicate under an And, so it
+  * never re-fires). Zoom is configurable with `spark.graft.celljoin.zoom`
   * (default 4, clamped to [0, 18]). Register at runtime through
   * `spark.experimental.extraOptimizations` (GraftFunctions.register) or at
   * build time via GraftExtensions. */
@@ -62,20 +61,11 @@ object CellJoinRule extends Rule[LogicalPlan] {
     math.max(0, math.min(18, z))
   }
 
-  private sealed trait SpatialMatch
-  private case class PointMatch(wkb: Expression, lon: Expression, lat: Expression,
-                                ptsLeft: Boolean) extends SpatialMatch
-  private case class GeomMatch(wkbLeft: Expression, wkbRight: Expression) extends SpatialMatch
-
-  def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case j @ Join(left, right, Inner | Cross, Some(pred), hint)
-        if matchPredicate(pred, left, right).isDefined =>
-      matchPredicate(pred, left, right).get match {
-        case PointMatch(wkb, lon, lat, ptsLeft) =>
-          rewritePoint(j, pred, wkb, lon, lat, ptsLeft, hint)
-        case GeomMatch(wl, wr) =>
-          rewriteGeom(j, pred, wl, wr, hint)
-      }
+  def apply(plan: LogicalPlan): LogicalPlan = {
+    val z = zoom
+    plan.transform {
+      case j: Join => PipJoin.lower(j, z).orElse(lowerGeom(j)).getOrElse(j)
+    }
   }
 
   /** Split a geometry-bearing side into (cover fits, cover oversized).
@@ -93,30 +83,6 @@ object CellJoinRule extends Rule[LogicalPlan] {
   private def naiveBranch(out: Seq[Attribute], l: LogicalPlan, r: LogicalPlan,
                           pred: Expression, hint: JoinHint): LogicalPlan =
     Project(out, Join(l, r, Inner, Some(And(Literal(true), pred)), hint))
-
-  private def rewritePoint(j: Join, pred: Expression, wkb: Expression,
-                           lon: Expression, lat: Expression, ptsLeft: Boolean,
-                           hint: JoinHint): LogicalPlan = {
-    val z = zoom
-    val (ptsSide, polySide) = if (ptsLeft) (j.left, j.right) else (j.right, j.left)
-    val (polyFit, polyBig) = splitByCoverSize(polySide, wkb, z)
-    // points side: one cell per row
-    val cellL = Alias(StCell(lon, lat, Literal(z)), "__graft_cell_pt")()
-    val pts2 = Project(ptsSide.output :+ cellL, ptsSide)
-    // polygon side: explode the cover
-    val cellR = AttributeReference("__graft_cell_poly", LongType, nullable = false)()
-    val polys2 = Generate(Explode(StCover(wkb, Literal(z))), Nil,
-      outer = false, qualifier = None, generatorOutput = Seq(cellR), child = polyFit)
-    val cond = And(EqualTo(cellL.toAttribute, cellR), pred)
-    val joined =
-      if (ptsLeft) Join(pts2, polys2, Inner, Some(cond), hint)
-      else Join(polys2, pts2, Inner, Some(cond), hint)
-    val cellBranch = Project(j.output, joined)
-    val bigBranch =
-      if (ptsLeft) naiveBranch(j.output, ptsSide, polyBig, pred, hint)
-      else naiveBranch(j.output, polyBig, ptsSide, pred, hint)
-    Union(Seq(cellBranch, bigBranch))
-  }
 
   private def rewriteGeom(j: Join, pred: Expression, wl: Expression,
                           wr: Expression, hint: JoinHint): LogicalPlan = {
@@ -146,38 +112,16 @@ object CellJoinRule extends Rule[LogicalPlan] {
     Union(Seq(cellBranch, bigL, bigR))
   }
 
-  /** The condition must be exactly one bare spatial predicate with its
-    * geometry/point references cleanly split across the two sides. */
-  private def matchPredicate(pred: Expression, left: LogicalPlan,
-                             right: LogicalPlan): Option[SpatialMatch] = {
-    val lSet = left.outputSet; val rSet = right.outputSet
-    // spark.graft.celljoin.strategy=exec hands point joins to
-    // PipJoinStrategy's physical operator instead (PipJoinExec.scala)
-    val execMode = PipJoinStrategy.mode == "exec"
-    pred match {
-      case StContainsPoint(_, _, _) | StIntersectsPoint(_, _, _) if execMode => None
-      case StContainsPoint(w, lo, la) => matchPoint(w, lo, la, lSet, rSet)
-      case StIntersectsPoint(w, lo, la) => matchPoint(w, lo, la, lSet, rSet)
-      case StIntersects(a, b)
-          if a.references.nonEmpty && b.references.nonEmpty =>
-        if (a.references.subsetOf(lSet) && b.references.subsetOf(rSet))
-          Some(GeomMatch(a, b))
-        else if (a.references.subsetOf(rSet) && b.references.subsetOf(lSet))
-          Some(GeomMatch(b, a))
-        else None
-      case _ => None
-    }
-  }
-
-  private def matchPoint(wkb: Expression, lon: Expression, lat: Expression,
-                         lSet: AttributeSet, rSet: AttributeSet): Option[SpatialMatch] = {
-    val ptCols = lon.references ++ lat.references
-    if (wkb.references.subsetOf(rSet) && ptCols.subsetOf(lSet) &&
-        wkb.references.nonEmpty && ptCols.nonEmpty)
-      Some(PointMatch(wkb, lon, lat, ptsLeft = true))
-    else if (wkb.references.subsetOf(lSet) && ptCols.subsetOf(rSet) &&
-        wkb.references.nonEmpty && ptCols.nonEmpty)
-      Some(PointMatch(wkb, lon, lat, ptsLeft = false))
-    else None
+  /** A join whose condition is exactly one bare st_intersects with one
+    * geometry on each side. */
+  private def lowerGeom(j: Join): Option[LogicalPlan] = j match {
+    case Join(left, right, Inner | Cross, Some(pred @ StIntersects(a, b)), hint)
+        if a.references.nonEmpty && b.references.nonEmpty =>
+      if (a.references.subsetOf(left.outputSet) && b.references.subsetOf(right.outputSet))
+        Some(rewriteGeom(j, pred, a, b, hint))
+      else if (a.references.subsetOf(right.outputSet) && b.references.subsetOf(left.outputSet))
+        Some(rewriteGeom(j, pred, b, a, hint))
+      else None
+    case _ => None
   }
 }

@@ -1,98 +1,125 @@
 package graft.plans
 
+import java.util.concurrent.TimeUnit.NANOSECONDS
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Join, LogicalPlan, Project}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graft.{StContainsPoint, StIntersectsPoint}
-import org.apache.spark.sql.internal.SQLConf
 import graft.functions.GeoKernel
 
-/** Physical-plan path for the naive point-in-polygon join — the whole-
-  * operator extensibility mechanism (SURVEY.md §2.J: custom `SparkStrategy`
-  * + `SparkPlan`), complementing the logical rewrite in [[CellJoinRule]].
+/** The point-in-polygon join — the north-rule operator. Pairs every row of
+  * `points` with every row of `polys` whose `wkb` contains the point
+  * (`lon`, `lat`) by the ray-crossing rule, or intersects it (boundary
+  * counts) when `boundary`. Output is `points.output ++ polys.output`.
   *
-  * Where the Rule re-expresses the join as cover-explode + equi-join and
-  * lets Catalyst pick the join algorithm, this strategy plans the join
-  * DIRECTLY: the polygon side (the dim side — admin boundaries, AOIs) is
-  * collected once on the driver into a cell → prepared-polygon hash index
-  * and broadcast; the point side streams through `mapPartitions`, probing
-  * one cell per row. No exploded cover is materialized, no shuffle at all
-  * on the 100-TB fact side — the same plan shape as Spark's own
+  * Two callers build it: [[CellJoinRule]] from a bare
+  * st_contains_point / st_intersects_point join (zoom from
+  * `spark.graft.celljoin.zoom`), and `SpatialJoin.pipJoin` with the
+  * caller's zoom. [[PipJoinStrategy]] always plans it as
+  * [[BroadcastPipJoinExec]]. `wkb`/`lon`/`lat` are the node's own
+  * expressions, so Catalyst's generic ColumnPruning case prunes both
+  * children to the columns the node and its parent reference. */
+case class PipJoin(points: LogicalPlan, polys: LogicalPlan, wkb: Expression,
+    lon: Expression, lat: Expression, zoom: Int, boundary: Boolean) extends BinaryNode {
+
+  override def left: LogicalPlan = points
+  override def right: LogicalPlan = polys
+  override def output: Seq[Attribute] = points.output ++ polys.output
+
+  protected override def withNewChildrenInternal(newLeft: LogicalPlan,
+      newRight: LogicalPlan): PipJoin = copy(points = newLeft, polys = newRight)
+}
+
+object PipJoin {
+
+  /** `j` as a [[PipJoin]] at zoom `z`, when its condition is exactly one
+    * bare point predicate with the polygon and the point on opposite
+    * sides. Keeps the join's column order (left ++ right). */
+  def lower(j: Join, z: Int): Option[LogicalPlan] = j match {
+    case Join(left, right, Inner | Cross, Some(pred), _) =>
+      val (wkb, lon, lat, boundary) = pred match {
+        case StContainsPoint(w, lo, la) => (w, lo, la, false)
+        case StIntersectsPoint(w, lo, la) => (w, lo, la, true)
+        case _ => return None
+      }
+      val ptRefs = lon.references ++ lat.references
+      def splits(pts: LogicalPlan, polys: LogicalPlan): Boolean =
+        ptRefs.nonEmpty && wkb.references.nonEmpty &&
+          ptRefs.subsetOf(pts.outputSet) && wkb.references.subsetOf(polys.outputSet)
+      if (splits(left, right)) Some(PipJoin(left, right, wkb, lon, lat, z, boundary))
+      else if (splits(right, left))
+        Some(Project(j.output, PipJoin(right, left, wkb, lon, lat, z, boundary)))
+      else None
+    case _ => None
+  }
+}
+
+/** Plans every [[PipJoin]] as [[BroadcastPipJoinExec]] — the one-node,
+  * one-exec `SparkStrategy` pattern (SURVEY.md §2.J). */
+object PipJoinStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case PipJoin(pts, polys, wkb, lon, lat, zoom, boundary) =>
+      Seq(BroadcastPipJoinExec(planLater(pts), planLater(polys), wkb, lon, lat, zoom, boundary))
+    case _ => Nil
+  }
+}
+
+/** Broadcast cell-indexed PIP join. The polygon side (the dim side —
+  * admin boundaries, AOIs) is collected once on the driver into a cell →
+  * polygon hash index and broadcast; the point side streams through
+  * `mapPartitions`, probing one cell per row and refining each candidate
+  * with the exact predicate. No exploded cover is materialized and the
+  * point side is never shuffled — the plan shape of Spark's own
   * BroadcastHashJoinExec, with the hash table keyed by spatial cell.
   *
   * Reference analog: OGR's layer-algebra loop installs a spatial-index
   * filter per probe feature (ogrlayer.cpp:5385-5538); the broadcast index
   * IS that spatial index, shipped to every executor once.
   *
-  * Selection is config-gated so the Rule and the Strategy never compete:
-  * `spark.graft.celljoin.strategy = rule` (default) keeps the logical
-  * rewrite; `= exec` makes [[CellJoinRule]] leave point joins alone and
-  * this strategy claim them. Zoom shares `spark.graft.celljoin.zoom`.
-  * Polygons whose cover at that zoom exceeds the 4096-cell cap go to a
-  * small always-probed side list instead of the index (same degradation
-  * as the Rule's naive branch, bounded by the broadcast contract).
-  */
-object PipJoinStrategy extends SparkStrategy {
-
-  private[plans] def mode: String =
-    try SQLConf.get.getConfString("spark.graft.celljoin.strategy", "rule")
-    catch { case _: Exception => "rule" }
-
-  private def zoom: Int = {
-    val z =
-      try SQLConf.get.getConfString("spark.graft.celljoin.zoom", "4").toInt
-      catch { case _: Exception => 4 }
-    math.max(0, math.min(18, z))
-  }
-
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case j @ Join(left, right, Inner | Cross, Some(pred), _) if mode == "exec" =>
-      val (wkb, lon, lat, boundary) = pred match {
-        case StContainsPoint(w, lo, la) => (w, lo, la, false)
-        case StIntersectsPoint(w, lo, la) => (w, lo, la, true)
-        case _ => return Nil
-      }
-      val ptRefs = lon.references ++ lat.references
-      if (wkb.references.isEmpty || ptRefs.isEmpty) return Nil
-      if (ptRefs.subsetOf(left.outputSet) && wkb.references.subsetOf(right.outputSet))
-        Seq(BroadcastPipJoinExec(planLater(left), planLater(right),
-          wkb, lon, lat, zoom, ptsLeft = true, boundary))
-      else if (ptRefs.subsetOf(right.outputSet) && wkb.references.subsetOf(left.outputSet))
-        Seq(BroadcastPipJoinExec(planLater(right), planLater(left),
-          wkb, lon, lat, zoom, ptsLeft = false, boundary))
-      else Nil
-    case _ => Nil
-  }
-}
-
-/** Broadcast cell-indexed PIP join: see [[PipJoinStrategy]]. `pts` streams,
-  * `polys` is collected + broadcast as a cell hash index. Output order
-  * matches the logical join (left ++ right). */
+  * Polygons whose cover at `zoom` exceeds the 4096-cell cap go to a small
+  * always-probed side list instead of the index. A polygon side larger
+  * than `spark.sql.maxBroadcastTableSize` is refused: that size takes the
+  * partitioned `SpatialJoin.pipJoinSalted`.
+  *
+  * Metrics: `numOutputRows`; `candidates`, the polygons refined (index
+  * hits plus side-list entries, summed over points); `indexBuildTime`,
+  * driver collect plus index build. */
 case class BroadcastPipJoinExec(pts: SparkPlan, polys: SparkPlan,
     wkb: Expression, lon: Expression, lat: Expression,
-    zoom: Int, ptsLeft: Boolean, boundary: Boolean) extends BinaryExecNode {
+    zoom: Int, boundary: Boolean) extends BinaryExecNode {
 
-  override def left: SparkPlan = if (ptsLeft) pts else polys
-  override def right: SparkPlan = if (ptsLeft) polys else pts
-  override def output: Seq[Attribute] = left.output ++ right.output
+  override def left: SparkPlan = pts
+  override def right: SparkPlan = polys
+  override def output: Seq[Attribute] = pts.output ++ polys.output
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "candidates" -> SQLMetrics.createMetric(sparkContext, "candidate polygons refined"),
+    "indexBuildTime" -> SQLMetrics.createTimingMetric(sparkContext, "index build time"))
 
   protected override def withNewChildrenInternal(newLeft: SparkPlan,
-      newRight: SparkPlan): BroadcastPipJoinExec =
-    if (ptsLeft) copy(pts = newLeft, polys = newRight)
-    else copy(pts = newRight, polys = newLeft)
+      newRight: SparkPlan): BroadcastPipJoinExec = copy(pts = newLeft, polys = newRight)
 
   protected override def doExecute(): RDD[InternalRow] = {
+    val numOut = longMetric("numOutputRows"); val numCands = longMetric("candidates")
+    val buildStart = System.nanoTime()
     val polyOut = polys.output
     val wkbBound = BindReferences.bindReference(wkb, polyOut)
     val z = zoom
-    // dim-side index build (the broadcast-hash-join contract: this side is
-    // small). Oversized covers fall into a linear side list, not an error.
+    val maxBytes = conf.maxBroadcastTableSizeInBytes
+    var collected = 0L
     val index = new java.util.HashMap[Long, java.util.ArrayList[(Array[Byte], InternalRow)]]()
     val oversize = new java.util.ArrayList[(Array[Byte], InternalRow)]()
     polys.executeCollect().foreach { row =>
+      collected += row.asInstanceOf[UnsafeRow].getSizeInBytes
+      if (collected > maxBytes) throw new IllegalArgumentException(
+        s"BroadcastPipJoin: polygon side exceeds spark.sql.maxBroadcastTableSize " +
+          s"($maxBytes bytes); join polygon sides this large with SpatialJoin.pipJoinSalted")
       val w = wkbBound.eval(row)
       if (w != null) {
         val bytes = w.asInstanceOf[Array[Byte]]
@@ -107,14 +134,14 @@ case class BroadcastPipJoinExec(pts: SparkPlan, polys: SparkPlan,
     }
     val bcIdx = sparkContext.broadcast(index)
     val bcBig = sparkContext.broadcast(oversize)
+    longMetric("indexBuildTime") += NANOSECONDS.toMillis(System.nanoTime() - buildStart)
     val ptsOut = pts.output
     val lonB = BindReferences.bindReference(lon, ptsOut)
     val latB = BindReferences.bindReference(lat, ptsOut)
-    val pl = ptsLeft; val bnd = boundary; val outAtts = output
+    val bnd = boundary; val outSchema = schema
     pts.execute().mapPartitions { it =>
       val joined = new JoinedRow
-      val proj = UnsafeProjection.create(outAtts,
-        if (pl) ptsOut ++ polyOut else polyOut ++ ptsOut)
+      val proj = UnsafeProjection.create(outSchema)
       val idx = bcIdx.value; val big = bcBig.value
       it.flatMap { ptRow =>
         val lo = lonB.eval(ptRow); val la = latB.eval(ptRow)
@@ -125,6 +152,7 @@ case class BroadcastPipJoinExec(pts: SparkPlan, polys: SparkPlan,
           val hits = new scala.collection.mutable.ArrayBuffer[InternalRow]()
           def probe(l: java.util.ArrayList[(Array[Byte], InternalRow)]): Unit =
             if (l != null) {
+              numCands += l.size()
               var i = 0
               while (i < l.size()) {
                 val (bytes, polyRow) = l.get(i)
@@ -135,9 +163,8 @@ case class BroadcastPipJoinExec(pts: SparkPlan, polys: SparkPlan,
               }
             }
           probe(cands); probe(big)
-          hits.iterator.map { polyRow =>
-            proj(if (pl) joined(ptRow, polyRow) else joined(polyRow, ptRow))
-          }
+          numOut += hits.length
+          hits.iterator.map(polyRow => proj(joined(ptRow, polyRow)))
         }
       }
     }

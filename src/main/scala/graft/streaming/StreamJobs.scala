@@ -164,13 +164,14 @@ object StreamJobs {
     * ([[graft.engine.SpatialJoin.pipJoin]]) with a STREAMING point side and
     * a static broadcast polygon side. The join is stateless — no watermark,
     * no state store — so it runs in append mode and scales to unbounded
-    * ingest: every micro-batch costs exactly the batch plan (map-side
-    * st_cell + broadcast hash join + direct-on-WKB refine) and nothing
-    * accumulates. Events arrive as three file slices across TWO
-    * checkpoint-restarted AvailableNow runs, so the gate also proves the
-    * file-source offset log prevents re-enrichment on restart (duplicates
-    * would fail the row-count compare). Returns the enriched pairs —
-    * byte-identical to the batch twin g03_pip_join. */
+    * ingest: every micro-batch costs exactly the batch plan (one
+    * BroadcastPipJoinExec: the polygon cell index is built and broadcast
+    * once per micro-batch, each point probes its cell and refines
+    * direct-on-WKB) and nothing accumulates. Events arrive as three file
+    * slices across TWO checkpoint-restarted AvailableNow runs, so the gate
+    * also proves the file-source offset log prevents re-enrichment on
+    * restart (duplicates would fail the row-count compare). Returns the
+    * enriched pairs — byte-identical to the batch twin g03_pip_join. */
   def streamPipJoin(spark: SparkSession, eventsParquet: String, work: String,
                     polys: DataFrame, z: Int,
                     lonExpr: String, latExpr: String): DataFrame = {

@@ -58,7 +58,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("salted spatial join returns identical rows to the plain join") {
     val skewDocs = GeoDocs.withGeometry(GeoDocs.generate(spark, 1000, skew = true).toDF)
-    val plain = SpatialJoin.pipJoin(skewDocs, zones, z = 6, broadcastPolys = false)
+    val plain = SpatialJoin.pipJoin(skewDocs, zones, z = 6)
       .select($"doc_id", $"zone_id").as[(String, String)].collect().toSet
     val salted = SpatialJoin.pipJoinSalted(skewDocs, zones, z = 6, salt = 8, saltKey = col("doc_id"))
       .select($"doc_id", $"zone_id").as[(String, String)].collect().toSet

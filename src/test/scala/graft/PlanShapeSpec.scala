@@ -177,7 +177,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("g65 subdivision join keeps the g03 broadcast-hash shape") {
     val df = SparkEntry.queries("g65_subdivide_join")(spark, "/root/testdata/sf0.001")
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin"), p.take(1200))
+    assert(p.contains("BroadcastPipJoin"), p.take(1200))
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       p.take(1200))
   }

@@ -1309,7 +1309,7 @@ object Queries {
           expr(s"1.0 + 2.0 * ${fract(s"CAST(p_partkey AS DOUBLE) * $sqrt3")}").as("w"))
         .withColumn("wkb", gf.st_geomfromtext(expr(rectWkt("cx", "cy", "w"))))
         .select("p_partkey", "wkb")
-      SpatialJoin.intersectsJoin(left, "o_orderkey", right, "p_partkey", z = 4)
+      SpatialJoin.intersectsJoin(left, right, z = 4)
         .select("o_orderkey", "p_partkey").orderBy("o_orderkey", "p_partkey")
     }, Some(s"""
       WITH l AS (SELECT o_orderkey, ${lonOfQ("o_orderkey")} AS cx, ${latOfQ("o_orderkey")} AS cy,
@@ -1804,11 +1804,13 @@ object Queries {
         FROM cells GROUP BY 2, 3 ORDER BY x, y"""
   }
 
+  // lazy: Queries2 reads Queries members while it initializes
+  private lazy val allDefs =
+    defs ++ defs2 ++ defs3 ++ Queries2.defs4 ++ Queries3.defs5 ++ Queries4.defs6 ++ Queries5.defs7 ++ Queries6.defs8 ++ Queries7.defs9
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    (defs ++ defs2 ++ defs3 ++ Queries2.defs4 ++ Queries3.defs5 ++ Queries4.defs6 ++ Queries5.defs7 ++ Queries6.defs8 ++ Queries7.defs9)
-      .map { case (n, f, _) => n -> f }.toMap
+    allDefs.map { case (n, f, _) => n -> f }.toMap
 
   def oracleSql: Map[String, String] =
-    (defs ++ defs2 ++ defs3 ++ Queries2.defs4 ++ Queries3.defs5 ++ Queries4.defs6 ++ Queries5.defs7 ++ Queries6.defs8 ++ Queries7.defs9)
-      .collect { case (n, _, Some(sql)) => n -> sql.trim }.toMap
+    allDefs.collect { case (n, _, Some(sql)) => n -> sql.trim }.toMap
 }

@@ -62,7 +62,7 @@ object Coverage {
     * overlap, measured as the portion of the overlap's boundary
     * contributed by the OTHER unit's boundary; ties → min index).
     *
-    * Distributed shape: candidate pairs from the cell-cover equi-join
+    * Distributed shape: candidate pairs from `SpatialJoin.intersectsJoin`
     * (never O(n²)); the overlap, the strategy decision and the boundary
     * classification are all pair-local map work; losers fold their lost
     * regions with ONE groupByKey. Overlaps involving exactly two owners —
@@ -70,8 +70,7 @@ object Coverage {
     * shared by 3+ units resolve pairwise (each loser subtracts every
     * region it lost), which can assign a deep stack to several winners —
     * rerun to a fixpoint for pathological inputs. */
-  def resolveOverlaps(df: DataFrame, strategy: String, z: Int = 6,
-                      broadcastRight: Boolean = true): DataFrame = {
+  def resolveOverlaps(df: DataFrame, strategy: String, z: Int = 6): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val strat = strategy
@@ -81,7 +80,7 @@ object Coverage {
       org.apache.spark.sql.functions.col("wkb"))
     val r = df.select(org.apache.spark.sql.functions.col("id").cast("long").as("ib"),
       org.apache.spark.sql.functions.col("wkb"))
-    val cand = SpatialJoin.intersectsJoin(l, "ia", r, "ib", z, broadcastRight)
+    val cand = SpatialJoin.intersectsJoin(l, r, z)
       .where(org.apache.spark.sql.functions.col("ia") <
         org.apache.spark.sql.functions.col("ib"))
       .select("ia", "ib", "wkb", "wkb_r")
@@ -132,13 +131,12 @@ object Coverage {
     * Distributed shape: the union comes from the map-side Dissolve
     * aggregator (interior edges cancel, so the combine tree carries
     * boundary-proportional payloads, never the row set); gaps meet only
-    * the units whose cell cover they share (one equi-join, gap side
-    * broadcast — gaps are a vanishing fraction of units); the merge fold
-    * is ONE groupByKey on unit id. */
+    * the units they intersect (one `SpatialJoin.intersectsJoin`); the
+    * merge fold is ONE groupByKey on unit id. */
   def closeGaps(df: DataFrame, maxWidth: Double, z: Int = 6): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.{broadcast, col, explode, lit}
+    import org.apache.spark.sql.functions.col
     val gaps = df.agg(Dissolve.unionCol(col("wkb")).as("u")).as[Array[Byte]]
       .flatMap { w =>
         val parts = Wkb.read(w) match {
@@ -153,15 +151,10 @@ object Coverage {
               GeoOps.area(Buffer.buffer(hp, -maxWidth / 2.0)) <= 0.0
           }
           .zipWithIndex.map { case (hp, i) => (i.toLong, Wkb.write(hp)) }
-      }.toDF("gid", "gwkb")
-    val gapSide = broadcast(
-      gaps.withColumn("cell", explode(graft.functions.gf.st_cover(col("gwkb"), lit(z)))))
-    val unitSide = df
-      .select(col("id").cast("long").as("id"), col("wkb"))
-      .withColumn("cell", explode(graft.functions.gf.st_cover(col("wkb"), lit(z))))
-    val won = unitSide.join(gapSide, "cell")
-      .dropDuplicates("id", "gid")
-      .select("gid", "id", "gwkb", "wkb")
+      }.toDF("gid", "wkb")
+    val units = df.select(col("id").cast("long").as("id"), col("wkb"))
+    val won = SpatialJoin.intersectsJoin(units, gaps, z)
+      .select("gid", "id", "wkb_r", "wkb")
       .as[(Long, Long, Array[Byte], Array[Byte])]
       .map { case (gid, id, gw, uw) =>
         val gap = Wkb.read(gw); val unit = Wkb.read(uw)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.graft.ColumnBridge
 import graft.functions.gf
 import graft.geom.{BoolOps, Geom, Wkb}
-import graft.plans.PipJoin
+import graft.plans.{CellJoinRule, PipJoin}
 
 /** Cell-indexed spatial joins — the north-rule operator (SURVEY.md §2.E).
   *
@@ -19,8 +19,8 @@ import graft.plans.PipJoin
   *   match on cell → exact PIP refine (st_contains_point)
   *
   * A point lands in exactly one cell, so point-vs-polygon candidates are
-  * already distinct — no dedup needed. Polygon-vs-polygon joins dedup on the
-  * id pair before the (expensive) exact predicate.
+  * already distinct — no dedup needed. Polygon-vs-polygon joins keep a
+  * pair only at the smallest shared cell, before the exact predicate.
   *
   * Scale notes (100 TB):
   *  - `pipJoin` always broadcasts the polygon side as a cell index
@@ -30,8 +30,8 @@ import graft.plans.PipJoin
   *    take `pipJoinSalted`: a partitioned equi-join on (cell, salt)
   *  - choose z so covers stay small (cells ≈ envelope_area / cell_area;
   *    z+1 quadruples cells)
-  *  - `intersectsJoin` explodes both covers; Spark/AQE picks broadcast or
-  *    shuffle by size, we only hint explicitly when told
+  *  - `intersectsJoin` is CellJoinRule's cell equi-join: Spark/AQE picks
+  *    broadcast or shuffle by size; covers over the cap take a nested loop
   */
 object SpatialJoin {
 
@@ -70,23 +70,18 @@ object SpatialJoin {
       .drop("cell", "salt")
   }
 
-  /** Polygon-polygon (layer algebra style) intersects join between `left`
-    * (leftId, wkb) and `right` (rightId, wkb2 renamed on the fly): cover both
-    * sides, equi-join on cell, dedup the id pair (a pair can share many
-    * cells), exact refine. Reference: Intersection/Union/Clip layer loops
+  /** Polygon-polygon (layer algebra style) intersects join: left columns +
+    * right columns (`wkb` renamed `wkb_r`), once for every row pair whose
+    * `wkb`s intersect. Plans as graft.plans.CellJoinRule's cell join at
+    * zoom `z`. Reference: Intersection/Union/Clip layer loops
     * (ogrlayer.cpp:5385,5803,7537).
     */
-  def intersectsJoin(left: DataFrame, leftId: String,
-                     right: DataFrame, rightId: String, z: Int,
-                     broadcastRight: Boolean = true): DataFrame = {
-    val l = left.withColumn("cell", explode(gf.st_cover(col("wkb"), lit(z))))
-    val rBase = right.withColumnRenamed("wkb", "wkb_r")
-      .withColumn("cell", explode(gf.st_cover(col("wkb_r"), lit(z))))
-    val r = if (broadcastRight) broadcast(rBase) else rBase
-    l.join(r, "cell")
-      .dropDuplicates(leftId, rightId)
-      .where(gf.st_intersects(col("wkb"), col("wkb_r")))
-      .drop("cell")
+  def intersectsJoin(left: DataFrame, right: DataFrame, z: Int): DataFrame = {
+    val r = right.withColumnRenamed("wkb", "wkb_r")
+    // as in pipJoin: the analyzed naive join brings self-join dedup
+    val naive = left.join(r, gf.st_intersects(left("wkb"), r("wkb_r")))
+    val lowered = CellJoinRule.lowerGeom(naive.queryExecution.analyzed.asInstanceOf[Join], z)
+    ColumnBridge.ofRows(left.sparkSession, lowered.get)
   }
 
   /** Layer-algebra Identity (OGRLayer::Identity,
@@ -99,16 +94,15 @@ object SpatialJoin {
     * set is deterministic (the reference drops empty remainders; callers
     * filter on st_isempty for that behavior — documented).
     *
-    * Spark shape: ONE cell-cover equi-join (method side broadcast when
-    * small), pair pieces map-side, the remainder fold is one groupByKey
-    * on lid — the same distribution the reference's per-feature loop has,
-    * minus the single-node bottleneck. */
-  def identity(left: DataFrame, right: DataFrame, z: Int,
-               broadcastRight: Boolean = true): DataFrame = {
+    * Spark shape: ONE `intersectsJoin` (Spark/AQE broadcasts the method
+    * side when small), pair pieces map-side, the remainder fold is one
+    * groupByKey on lid — the same distribution the reference's
+    * per-feature loop has, minus the single-node bottleneck. */
+  def identity(left: DataFrame, right: DataFrame, z: Int): DataFrame = {
     val spark = left.sparkSession
     import spark.implicits._
-    val cand = intersectsJoin(left.select(col("lid"), col("wkb")), "lid",
-      right.select(col("rid"), col("wkb")), "rid", z, broadcastRight)
+    val cand = intersectsJoin(left.select(col("lid"), col("wkb")),
+      right.select(col("rid"), col("wkb")), z)
       .select("lid", "rid", "wkb", "wkb_r")
       .as[(Long, Long, Array[Byte], Array[Byte])]
     val pairs = cand.map { case (lid, rid, a, b) =>
@@ -131,8 +125,7 @@ object SpatialJoin {
 
   /** Layer-algebra Erase (OGRLayer::Erase): each left feature minus the
     * union of intersecting right features — Identity's remainder rows. */
-  def erase(left: DataFrame, right: DataFrame, z: Int,
-            broadcastRight: Boolean = true): DataFrame =
-    identity(left, right, z, broadcastRight)
+  def erase(left: DataFrame, right: DataFrame, z: Int): DataFrame =
+    identity(left, right, z)
       .where(col("rid").isNull).drop("rid")
 }

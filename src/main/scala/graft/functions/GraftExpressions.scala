@@ -864,6 +864,16 @@ case class StCoverCount(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** CellJoinRule's fallback-branch predicate, evaluated unchanged: unlike
+  * And(true, p), no optimizer rule folds it back into the bare p. */
+case class CellJoinFallback(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = child.dataType
+  protected override def nullSafeEval(v: Any): Any = v
+  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => c)
+  protected override def withNewChildInternal(c: Expression): CellJoinFallback = copy(child = c)
+}
+
 /** cell_ring(cell, r) → array<long> of cells at Chebyshev distance r
   * (kNN ring expansion, SURVEY.md §2.H). */
 case class CellRing(left: Expression, right: Expression)

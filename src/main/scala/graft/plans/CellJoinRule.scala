@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.sql.graft.{StCover, StCoverCount, StIntersects}
+import org.apache.spark.sql.graft.{CellJoinFallback, StCover, StCoverCount, StIntersects}
 
 /** Optimizer rule: rewrite naive spatial-predicate joins
   *
@@ -44,11 +44,12 @@ import org.apache.spark.sql.graft.{StCover, StCoverCount, StIntersects}
   * scan is exactly what this rewrite recovers declaratively.
   *
   * The rule fires only when the join condition IS the bare spatial
-  * predicate (the geom rewrite carries the predicate under an And, so it
-  * never re-fires). Zoom is configurable with `spark.graft.celljoin.zoom`
-  * (default 4, clamped to [0, 18]). Register at runtime through
-  * `spark.experimental.extraOptimizations` (GraftFunctions.register) or at
-  * build time via GraftExtensions. */
+  * predicate; its own output never is (the cell branch ANDs it with the
+  * cell keys, the fallback branches wrap it in CellJoinFallback, which no
+  * optimizer rule folds), so it never re-fires. Zoom is configurable with
+  * `spark.graft.celljoin.zoom` (default 4, clamped to [0, 18]). Register
+  * at runtime through `spark.experimental.extraOptimizations`
+  * (GraftFunctions.register) or at build time via GraftExtensions. */
 object CellJoinRule extends Rule[LogicalPlan] {
 
   /** Matches CellId.cover's default cap. */
@@ -64,7 +65,7 @@ object CellJoinRule extends Rule[LogicalPlan] {
   def apply(plan: LogicalPlan): LogicalPlan = {
     val z = zoom
     plan.transform {
-      case j: Join => PipJoin.lower(j, z).orElse(lowerGeom(j)).getOrElse(j)
+      case j: Join => PipJoin.lower(j, z).orElse(lowerGeom(j, z)).getOrElse(j)
     }
   }
 
@@ -79,14 +80,13 @@ object CellJoinRule extends Rule[LogicalPlan] {
   }
 
   /** The fallback nested-loop branch: original join shape, predicate
-    * wrapped under And(true, pred) so this rule cannot re-fire on it. */
+    * wrapped in CellJoinFallback so this rule cannot re-fire on it. */
   private def naiveBranch(out: Seq[Attribute], l: LogicalPlan, r: LogicalPlan,
                           pred: Expression, hint: JoinHint): LogicalPlan =
-    Project(out, Join(l, r, Inner, Some(And(Literal(true), pred)), hint))
+    Project(out, Join(l, r, Inner, Some(CellJoinFallback(pred)), hint))
 
   private def rewriteGeom(j: Join, pred: Expression, wl: Expression,
-                          wr: Expression, hint: JoinHint): LogicalPlan = {
-    val z = zoom
+                          wr: Expression, hint: JoinHint, z: Int): LogicalPlan = {
     val (lFit, lBig) = splitByCoverSize(j.left, wl, z)
     val (rFit, rBig) = splitByCoverSize(j.right, wr, z)
     // each side carries its full (sorted) cover array AND the exploded cell
@@ -112,15 +112,15 @@ object CellJoinRule extends Rule[LogicalPlan] {
     Union(Seq(cellBranch, bigL, bigR))
   }
 
-  /** A join whose condition is exactly one bare st_intersects with one
-    * geometry on each side. */
-  private def lowerGeom(j: Join): Option[LogicalPlan] = j match {
+  /** `j` as the cell join at zoom `z` (output left ++ right), when its
+    * condition is exactly one bare st_intersects, one geometry a side. */
+  def lowerGeom(j: Join, z: Int): Option[LogicalPlan] = j match {
     case Join(left, right, Inner | Cross, Some(pred @ StIntersects(a, b)), hint)
         if a.references.nonEmpty && b.references.nonEmpty =>
       if (a.references.subsetOf(left.outputSet) && b.references.subsetOf(right.outputSet))
-        Some(rewriteGeom(j, pred, a, b, hint))
+        Some(rewriteGeom(j, pred, a, b, hint, z))
       else if (a.references.subsetOf(right.outputSet) && b.references.subsetOf(left.outputSet))
-        Some(rewriteGeom(j, pred, b, a, hint))
+        Some(rewriteGeom(j, pred, b, a, hint, z))
       else None
     case _ => None
   }

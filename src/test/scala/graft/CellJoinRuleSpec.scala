@@ -1,9 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.optimizer.BooleanSimplification
+import org.apache.spark.sql.catalyst.plans.logical.{Join, Union}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import graft.functions.{gf, GraftFunctions}
+import graft.functions.{gf, GraftExtensions, GraftFunctions}
+import graft.plans.CellJoinRule
 
 /** The optimizer rule must turn a naive spatial-predicate join (nested
   * loop) into a cell-indexed join, with identical results: point joins
@@ -96,12 +100,63 @@ class CellJoinRuleSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assertCellRewrite(naive.queryExecution.executedPlan.toString, "__graft_cell")
     val got = naive.select("id", "id_b")
       .collect().map(r => (r.getString(0), r.getString(1))).sorted
-    // oracle: brute-force via a guarded (non-matching) condition
-    val brute = a.join(b, gf.st_intersects(col("wkb"), col("wkb_b")) && lit(true))
-      .select("id", "id_b")
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted
+    // oracle: every pair tested on the driver, no cells involved
+    def geoms(df: DataFrame) =
+      df.collect().map(r => (r.getString(0), graft.geom.Wkb.read(r.getAs[Array[Byte]](1))))
+    val brute = (for ((ia, ga) <- geoms(a); (ib, gb) <- geoms(b)
+                      if graft.geom.GeoOps.intersects(ga, gb)) yield (ia, ib)).sorted
     assert(got.sameElements(brute), s"${got.length} vs ${brute.length}")
     assert(got.length > 64, "expected overlapping neighbors beyond self-matches")
+  }
+
+  /** n×n overlapping 35° squares on a 30° pitch, from a Range (not a local
+    * relation, which the optimizer would evaluate and prune). */
+  private def rangeGrid(s: SparkSession, n: Int, id: String, wkb: String): DataFrame = {
+    val x = lit(-150.0) + pmod(col("id"), lit(n)) * 30.0
+    val y = lit(-60.0) + floor(col("id") / n) * 30.0
+    s.range(n * n).select(col("id").as(id), gf.st_geomfromtext(format_string(
+      "POLYGON ((%s %s, %s %s, %s %s, %s %s, %s %s))",
+      x, y, x + 35.0, y, x + 35.0, y + 35.0, x, y + 35.0, x, y)).as(wkb))
+  }
+
+  private def naiveIntersects(s: SparkSession): DataFrame = {
+    val a = rangeGrid(s, 8, "id", "wkb"); val b = rangeGrid(s, 8, "id_b", "wkb_b")
+    a.join(b, gf.st_intersects(a("wkb"), b("wkb_b")))
+  }
+
+  private def joinsAndUnions(df: DataFrame): (Int, Int) = {
+    val p = df.queryExecution.optimizedPlan
+    (p.collect { case j: Join => j }.size, p.collect { case u: Union => u }.size)
+  }
+
+  test("geom rewrite is idempotent: BooleanSimplification leaves it nothing to redo") {
+    val s = SparkTestSession.spark
+    val analyzed = naiveIntersects(s).queryExecution.analyzed
+    val once = CellJoinRule(analyzed)
+    assert(!once.fastEquals(analyzed))
+    val simplified = BooleanSimplification(once)
+    assert(CellJoinRule(simplified).fastEquals(simplified), s"rule fired again on:\n$simplified")
+  }
+
+  test("st_intersects: 3 joins, 1 union via register, extensions, intersectsJoin") {
+    val base = SparkTestSession.spark
+    GraftFunctions.register(base)
+    assert(joinsAndUnions(naiveIntersects(base)) === ((3, 1)))
+    val a = rangeGrid(base, 8, "id", "wkb"); val b = rangeGrid(base, 8, "id_b", "wkb")
+    assert(joinsAndUnions(engine.SpatialJoin.intersectsJoin(a, b, z = 4)) === ((3, 1)))
+    // the extension injects the rule into the operator-optimization batch,
+    // beside BooleanSimplification; it needs a session built with it
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    try {
+      val ext = SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+      assert(!ext.experimental.extraOptimizations.contains(CellJoinRule))
+      // a rule that re-fires doubles the plan each iteration: cap them so
+      // such a regression fails here instead of stalling the suite
+      ext.conf.set("spark.sql.optimizer.maxIterations", "5")
+      assert(joinsAndUnions(naiveIntersects(ext)) === ((3, 1)))
+    } finally {
+      SparkSession.setDefaultSession(base); SparkSession.setActiveSession(base)
+    }
   }
 
   test("BroadcastPipJoin reports candidates and output rows as SQL metrics") {

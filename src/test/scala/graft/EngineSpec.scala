@@ -67,7 +67,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("polygon-polygon intersects join vs per-row oracle") {
     val polyDocs = pts.where(gf.st_geometrytype($"wkb") === "POLYGON").limit(200).cache()
-    val got = SpatialJoin.intersectsJoin(polyDocs, "doc_id", zones.withColumnRenamed("zone_id", "zid"), "zid", z = 6)
+    val got = SpatialJoin.intersectsJoin(polyDocs, zones.withColumnRenamed("zone_id", "zid"), z = 6)
       .select($"doc_id", $"zid").as[(String, String)].collect().toSet
     val zGeoms = zoneWkts.map { case (id, w) => (id, Wkt.parse(w)) }
     val oracle = polyDocs.select($"doc_id", gf.st_astext($"wkb")).as[(String, String)].collect()
@@ -76,6 +76,47 @@ class EngineSpec extends AnyFunSuite {
         zGeoms.filter { case (_, zg) => graft.geom.GeoOps.intersects(g, zg) }.map(z => (id, z._1))
       }.toSet
     assert(got == oracle && got.nonEmpty)
+  }
+
+  // driver-side oracle for intersectsJoin: every (lid, rid) pair whose
+  // geometries intersect, no cells involved
+  private def intersectsOracle(l: Seq[(Long, String)], r: Seq[(Long, String)]) =
+    (for ((li, lw) <- l; (ri, rw) <- r
+          if graft.geom.GeoOps.intersects(Wkt.parse(lw), Wkt.parse(rw))) yield (li, ri)).toSet
+
+  private def wktDf(rows: Seq[(Long, String)], id: String) =
+    rows.toDF(id, "wkt").withColumn("wkb", gf.st_geomfromtext($"wkt")).drop("wkt")
+
+  test("intersectsJoin plans the cell join at the caller's zoom, not the conf's") {
+    val rect = Seq((1L, "POLYGON ((0 0, 30 0, 30 30, 0 30, 0 0))"))
+    val plan = SpatialJoin.intersectsJoin(wktDf(rect, "lid"), wktDf(rect, "rid"), z = 6)
+      .queryExecution.analyzed // the optimizer evaluates covers over local rows
+    val zooms = plan.flatMap(_.expressions.flatMap(_.collect {
+      case org.apache.spark.sql.graft.StCover(_, org.apache.spark.sql.catalyst.expressions.Literal(z, _)) => z
+    }))
+    assert(zooms.nonEmpty && zooms.forall(_ == 6), s"st_cover zooms $zooms in:\n$plan")
+  }
+
+  test("intersectsJoin: a world polygon over the cover cap returns its oracle rows") {
+    // at z=8 the first polygon's cover needs ~60k cells, above the 4096 cap
+    val l = Seq((1L, "POLYGON ((-179 -80, 179 -80, 179 80, -179 80, -179 -80))"),
+      (2L, "POLYGON ((9 9, 12 9, 12 12, 9 12, 9 9))"))
+    val r = Seq((10L, "POLYGON ((10 10, 11 10, 11 11, 10 11, 10 10))"),
+      (20L, "POLYGON ((100 -20, 101 -20, 101 -19, 100 -19, 100 -20))"),
+      (30L, "POLYGON ((100 82, 101 82, 101 83, 100 83, 100 82))"))
+    val got = SpatialJoin.intersectsJoin(wktDf(l, "lid"), wktDf(r, "rid"), z = 8)
+      .select($"lid", $"rid").as[(Long, Long)].collect().toSet
+    assert(got == intersectsOracle(l, r) && got == Set((1L, 10L), (1L, 20L), (2L, 10L)))
+  }
+
+  test("intersectsJoin reports a pair sharing many cells once") {
+    // two 40° squares overlapping over ~8x8 cells at z=6
+    val l = Seq((1L, "POLYGON ((0 0, 40 0, 40 40, 0 40, 0 0))"))
+    val r = Seq((2L, "POLYGON ((5 5, 45 5, 45 45, 5 45, 5 5))"))
+    val got = SpatialJoin.intersectsJoin(wktDf(l, "lid"), wktDf(r, "rid"), z = 6)
+      .select($"lid", $"rid")
+    assert(got.count() == got.distinct().count())
+    assert(got.as[(Long, Long)].collect().toSet == intersectsOracle(l, r))
   }
 
   test("tile assignment matches scala-side mercator math for every row and zoom") {

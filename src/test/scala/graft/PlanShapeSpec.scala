@@ -182,6 +182,25 @@ class PlanShapeSpec extends AnyFunSuite {
       p.take(1200))
   }
 
+  test("polygon-polygon gates plan the cell join, no aggregate on the id pair") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    Seq("g18_layer_algebra" -> Set("o_orderkey", "p_partkey"),
+        "g37_identity_erase" -> Set("lid", "rid"),
+        "g44_merge_sliver" -> Set("ia", "ib"),
+        "g45_close_gaps" -> Set("id", "gid")).foreach { case (gate, ids) =>
+      val df = SparkEntry.queries(gate)(spark, "/root/testdata/sf0.001")
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      assert(plan.toString.contains("__graft_cell_l"), s"$gate:\n$plan")
+      val pairAggs = helper.collect(plan) {
+        case a: BaseAggregateExec if a.groupingExpressions.flatMap(_.references.map(_.name)).toSet == ids => a
+      }
+      assert(pairAggs.isEmpty, s"$gate aggregates on $ids:\n$plan")
+    }
+  }
+
   test("d30 per-domain cap aggregates partially before the shuffle, no Window") {
     val df = SparkEntry.queries("d30_domain_cap")(spark, "/root/testdata/sf0.001")
     val p = df.queryExecution.executedPlan.toString
